@@ -354,7 +354,6 @@ def main() -> None:
     import __spark_entry__ as e
     from datalake_etlscripts_spark.session import get_spark
 
-    spark = get_spark("bench")
     qs = dict(e.queries()) | BENCH_ONLY
     names = [n for n in HEADLINE if n in qs] or list(qs)
     # opt-in subset filter for builder-side experiments (the higher-SF
@@ -363,7 +362,12 @@ def main() -> None:
     only = os.environ.get("SPARK_GRAFT_BENCH_QUERIES")
     if only:
         want = [s.strip() for s in only.split(",") if s.strip()]
-        names = [n for n in want if n in qs]
+        unknown = [n for n in want if n not in qs]
+        if unknown or not want:
+            sys.exit(f"bench.py: SPARK_GRAFT_BENCH_QUERIES={only!r}: unknown queries {unknown}")
+        names = want
+
+    spark = get_spark("bench")
 
     # warm the JVM + parquet footers once so timings measure the plans
     _force(qs[names[0]](spark, sf_dir))

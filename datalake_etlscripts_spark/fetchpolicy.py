@@ -41,7 +41,6 @@ ACCEPTED_DOC_TYPES = frozenset(
 )
 
 # reference ntp_constants.py:10-13
-TIMEOUT_S = 10.0
 REDIRECT_CODES = (301, 302, 303, 307, 308)
 MAX_REDIRECTS = 30
 
@@ -208,36 +207,3 @@ def policy_fetcher(
         return fetch_with_policy(url, transport, max_redirects=max_redirects)
 
     return fetch
-
-
-def requests_transport(
-    verify_ca: bool = True, timeout: float = TIMEOUT_S
-) -> Transport:
-    """Production transport over ``requests`` (never follows redirects
-    itself — the policy loop does, like the reference's
-    allow_redirects=False). Import-gated: the library is absent in the
-    test container, and tests inject fakes instead."""
-    try:
-        import requests  # noqa: PLC0415
-    except ImportError as exc:  # pragma: no cover - environment boundary
-        raise NotImplementedError(
-            "requests is not installed in this environment; inject a "
-            "Transport (tests use deterministic fakes)"
-        ) from exc
-
-    def get(url: str) -> Response:
-        try:
-            r = requests.get(
-                url, timeout=timeout, allow_redirects=False, verify=verify_ca
-            )
-        except requests.exceptions.SSLError as exc:
-            raise TransportSSLError(str(exc)) from exc
-        except requests.exceptions.Timeout as exc:
-            raise TransportTimeout(str(exc)) from exc
-        return Response(
-            r.status_code,
-            {k.lower(): v for k, v in r.headers.items()},
-            r.content,
-        )
-
-    return get

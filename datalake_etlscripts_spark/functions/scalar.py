@@ -29,6 +29,12 @@ NTP_ID_RE = r"^ntp[0-9]{8}$"
 MIN_ORDER = {"insiders": 0, "outsiders": 0, "minors": 10_000_000}
 
 
+def order_range(group: str = "contracts") -> tuple[int, int]:
+    """Lowest and highest id order of the group's 'ntp%08d' range."""
+    lo = MIN_ORDER["minors"] if group == "minors" else 0
+    return lo, lo + MIN_ORDER["minors"] - 1
+
+
 def format_ntp_id(order: Column) -> Column:
     """F1: int order → 'ntp%08d' surrogate key."""
     return F.format_string("ntp%08d", order.cast("long"))

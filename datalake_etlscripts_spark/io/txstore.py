@@ -10,9 +10,9 @@ module implements the lakehouse commit protocol directly:
   layout    <path>/data/c{version}-*/part-*.parquet   immutable files
             <path>/_txlog/{version:020}.json          commit manifests
   commit    a manifest is the FULL live-file list (a self-contained
-            checkpoint, like Delta's checkpoint parquet) plus the
-            add/remove delta for history display and arbitrary
-            metadata (e.g. the versioned-ingest id counter).
+            checkpoint, like Delta's checkpoint parquet), the table
+            schema, the add/remove delta for history display and
+            arbitrary metadata (e.g. the versioned-ingest id counter).
   atomicity manifests are created with O_EXCL (put-if-absent): two
             writers racing to version N+1 — one wins, the loser gets
             ConcurrentCommitError and retries on the new snapshot.
@@ -20,7 +20,9 @@ module implements the lakehouse commit protocol directly:
             so a crashed half-written commit is invisible (its orphan
             data files are garbage-collected by vacuum).
   snapshot  snapshot(version=…) / snapshot(as_of=…) reads one manifest
-            — O(1) time travel, no log replay.
+            — O(1) time travel, no log replay — and reads its files
+            with the schema it records: no footer-inference job, and
+            each version keeps its own schema.
   MERGE     copy-on-write with file-level key-stat pruning: each data
             file records min/max of the table key; a merge only
             rewrites files whose [min,max] interval can contain a
@@ -29,14 +31,28 @@ module implements the lakehouse commit protocol directly:
             batch. Pruning uses an interval join against the (tiny)
             stats table, never a full scan.
 
+Where the log's contents come from (as Delta keeps schema and per-file
+stats in its log, written with the files, so readers and MERGE never
+re-derive them):
+- schema: the schema of the frame a commit writes; an evolving commit
+  records the widened schema. A DELETE writes no new columns and
+  carries the previous version's schema forward. Every manifest has
+  one: there is no footer-inference fallback.
+- per-file rows and key min/max: each new file's parquet footer, read
+  on the driver right after the write (pyarrow), so no Spark job reads
+  the files back. 0-row files are not recorded; a file whose footer has
+  no min/max for the key (all-null key, over-long values, a key that is
+  neither integer nor string) records None and every merge touches it.
+
 Scale notes:
 - the manifest is file-level metadata (path, rows, key min/max): ~100
   bytes/file. A 100 TB table at 1 GB/file is ~10^5 entries — a few MB
   of JSON, fine to read on the driver. (Past ~10^7 files the full-list
   checkpoint would itself become a parquet table, as Delta does.)
-- stats-based pruning assumes writers cluster the key within files;
-  `ingest` repartitions by key range before writing so file intervals
-  stay narrow and selective.
+- stats-based pruning only pays when writers cluster the key within
+  files. Nothing here repartitions by key: a file holds whatever rows
+  its write task got, so its [min, max] interval usually spans most of
+  the key space and a merge rewrites most files.
 """
 
 from __future__ import annotations
@@ -47,8 +63,9 @@ import time
 import uuid
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -79,6 +96,34 @@ def _log_dir(path: str) -> str:
 
 def _manifest_path(path: str, version: int) -> str:
     return os.path.join(_log_dir(path), f"{version:020d}.json")
+
+
+def _schema(manifest: dict) -> StructType:
+    """The table schema a manifest records."""
+    return StructType.fromJson(manifest["schema"])
+
+
+def _key_range(md, key: str | None) -> tuple[object, object]:
+    """Min/max of the top-level column ``key`` over a parquet file's row
+    groups, from its footer metadata ``md``. (None, None) when any row
+    group lacks them or they are neither int nor str (only those compare
+    the way Spark's ``min``/``max`` do in ``_prune_touched``)."""
+    if key is None or md.num_row_groups == 0:
+        return None, None
+    rg = md.row_group(0)
+    col = next((j for j in range(rg.num_columns) if rg.column(j).path_in_schema == key), None)
+    if col is None:
+        return None, None
+    lo = hi = None
+    for i in range(md.num_row_groups):
+        st = md.row_group(i).column(col).statistics
+        if st is None or not st.has_min_max:
+            return None, None
+        lo = st.min if lo is None else min(lo, st.min)
+        hi = st.max if hi is None else max(hi, st.max)
+    if not all(isinstance(x, (int, str)) and not isinstance(x, bool) for x in (lo, hi)):
+        return None, None
+    return lo, hi
 
 
 class TransactionalStore:
@@ -130,40 +175,23 @@ class TransactionalStore:
     # ------------------------------------------------------------------
 
     def _write_data(self, df: DataFrame, version: int, key: str | None) -> list[FileEntry]:
-        """Write one commit's data files and collect per-file key stats.
-        Stats come from one column-pruned scan of the just-written files
-        (the write itself already materialized them)."""
+        """Write one commit's data files; each file's row count and key
+        min/max come from its parquet footer, read on the driver, so no
+        Spark job reads the files back. 0-row files are left out."""
+        import pyarrow.parquet as pq
+
         sub = f"c{version}-{uuid.uuid4().hex[:8]}"
         out = os.path.join(self.path, "data", sub)
         df.write.parquet(out)
-        written = self.spark.read.parquet(out)
-        if key is not None and key in written.columns:
-            stats = (
-                written.groupBy(F.input_file_name().alias("f"))
-                .agg(
-                    F.count(F.lit(1)).alias("rows"),
-                    F.min(key).alias("kmin"),
-                    F.max(key).alias("kmax"),
-                )
-                .collect()
-            )
-        else:
-            stats = (
-                written.groupBy(F.input_file_name().alias("f"))
-                .agg(F.count(F.lit(1)).alias("rows"))
-                .collect()
-            )
         entries = []
-        for r in stats:
-            rel = os.path.join("data", sub, os.path.basename(r["f"]))
-            entries.append(
-                FileEntry(
-                    rel,
-                    r["rows"],
-                    r["kmin"] if key is not None and "kmin" in r.__fields__ else None,
-                    r["kmax"] if key is not None and "kmax" in r.__fields__ else None,
+        for name in sorted(os.listdir(out)):
+            if name.startswith(("_", ".")) or not name.endswith(".parquet"):
+                continue
+            md = pq.read_metadata(os.path.join(out, name))
+            if md.num_rows:
+                entries.append(
+                    FileEntry(os.path.join("data", sub, name), md.num_rows, *_key_range(md, key))
                 )
-            )
         return entries
 
     def _commit(
@@ -174,13 +202,19 @@ class TransactionalStore:
         added: list[str],
         removed: list[str],
         metadata: dict,
+        schema: StructType | None = None,
     ) -> None:
+        """Publish ``version``. ``schema`` defaults to the previous
+        version's: only writes that can change the columns pass one."""
+        if schema is None:
+            schema = _schema(self._read_manifest(version - 1))
         os.makedirs(_log_dir(self.path), exist_ok=True)
         manifest = {
             "version": version,
             "timestamp": time.time(),
             "operation": operation,
             "metadata": metadata,
+            "schema": schema.jsonValue(),
             "files": [
                 {"path": e.path, "rows": e.rows, "key_min": e.key_min, "key_max": e.key_max}
                 for e in files
@@ -207,6 +241,13 @@ class TransactionalStore:
             m,
         )
 
+    def _read(self, files: list[FileEntry], schema: StructType) -> DataFrame:
+        """The given files under the recorded table schema: files written
+        before an ADD COLUMNS evolution read the new columns as null."""
+        return self.spark.read.schema(schema).parquet(
+            *[os.path.join(self.path, e.path) for e in files]
+        )
+
     # ------------------------------------------------------------------
     # public API
     # ------------------------------------------------------------------
@@ -221,7 +262,7 @@ class TransactionalStore:
             raise FileExistsError(f"table already exists at {path}")
         meta = {"key": key, **(metadata or {})}
         entries = store._write_data(df, 0, key)
-        store._commit(0, entries, "CREATE", [e.path for e in entries], [], meta)
+        store._commit(0, entries, "CREATE", [e.path for e in entries], [], meta, df.schema)
         return store
 
     def key(self, version: int | None = None) -> str | None:
@@ -232,29 +273,25 @@ class TransactionalStore:
         ``as_of`` picks the last version committed at or before that
         unix timestamp."""
         v = self._resolve_version(version, as_of)
-        files, _ = self._live(v)
+        files, m = self._live(v)
         if not files:
             raise VersionNotFoundError(f"version {v} has no data files")
-        # mergeSchema: commits made after an ADD COLUMNS evolution read
-        # uniformly with older files (missing columns null-filled); a
-        # footer union over the live files, no data rewrite
-        return self.spark.read.option("mergeSchema", "true").parquet(
-            *[os.path.join(self.path, e.path) for e in files]
-        )
+        return self._read(files, _schema(m))
 
     # ------------------------------------------------------------------
     # schema enforcement / evolution
     # ------------------------------------------------------------------
 
     def _align_schema(
-        self, df: DataFrame, evolve: bool, label: str
+        self, df: DataFrame, evolve: bool, label: str, manifest: dict
     ) -> DataFrame:
         """Enforce writer-schema == table-schema by default; with
         ``evolve`` align instead (Delta mergeSchema semantics): new
         writer columns are ADDED to the table, columns the writer omits
         are null-filled. Same-name/different-type is ALWAYS an error —
-        silent casts corrupt data at scale."""
-        current = {f.name: f.dataType for f in self.snapshot().schema.fields}
+        silent casts corrupt data at scale. ``manifest`` is the latest
+        version's, whose schema is the table's."""
+        current = {f.name: f.dataType for f in _schema(manifest).fields}
         incoming = {f.name: f.dataType for f in df.schema.fields}
         conflicts = [
             n for n in incoming
@@ -303,9 +340,11 @@ class TransactionalStore:
     ) -> int:
         v = self.latest_version()
         files, m = self._live(v)
-        df = self._align_schema(df, evolve_schema, operation)
+        df = self._align_schema(df, evolve_schema, operation, m)
         new = self._write_data(df, v + 1, m["metadata"].get("key"))
-        self._commit(v + 1, files + new, operation, [e.path for e in new], [], m["metadata"])
+        self._commit(
+            v + 1, files + new, operation, [e.path for e in new], [], m["metadata"], df.schema
+        )
         return v + 1
 
     def overwrite(self, df: DataFrame, metadata_update: dict | None = None) -> int:
@@ -315,7 +354,7 @@ class TransactionalStore:
         new = self._write_data(df, v + 1, meta.get("key"))
         self._commit(
             v + 1, new, "OVERWRITE", [e.path for e in new],
-            [e.path for e in files], meta,
+            [e.path for e in files], meta, df.schema,
         )
         return v + 1
 
@@ -376,12 +415,9 @@ class TransactionalStore:
         sk = source_key or key
         touched = self._prune_touched(files, source.select(sk))
         untouched = [e for e in files if e not in touched]
-        if touched:
-            subset = self.spark.read.option("mergeSchema", "true").parquet(
-                *[os.path.join(self.path, e.path) for e in touched]
-            )
-        else:
-            subset = self.snapshot(v).limit(0)
+        subset = self._read(touched or files, _schema(m))
+        if not touched:
+            subset = subset.limit(0)
         if evolve_schema:
             # align both frames to their union schema so merge_fn can
             # unionByName without caring which side carried a column
@@ -401,15 +437,15 @@ class TransactionalStore:
         # schema enforcement happens on what gets WRITTEN: a MERGE
         # source may be any relation, but the replacement rows must
         # match the table unless evolution was requested
-        replacement = self._align_schema(replacement, evolve_schema, operation)
-        # metadata_update may be a callable so it can observe state the
-        # merge_fn computed (e.g. how many fresh ids it assigned)
-        upd = metadata_update() if callable(metadata_update) else (metadata_update or {})
-        meta = {**m["metadata"], **upd}
+        replacement = self._align_schema(replacement, evolve_schema, operation, m)
         new = self._write_data(replacement, v + 1, key)
+        # metadata_update may be a callable, called after the write so
+        # it can read what the write computed (e.g. an Observation of
+        # how many fresh ids merge_fn assigned)
+        upd = metadata_update() if callable(metadata_update) else (metadata_update or {})
         self._commit(
             v + 1, untouched + new, operation, [e.path for e in new],
-            [e.path for e in touched], meta,
+            [e.path for e in touched], {**m["metadata"], **upd}, replacement.schema,
         )
         return v + 1
 
@@ -430,11 +466,7 @@ class TransactionalStore:
         if not touched:
             self._commit(v + 1, files, "DELETE", [], [], m["metadata"])
             return v + 1
-        keep = (
-            self.spark.read.option("mergeSchema", "true")
-            .parquet(*[os.path.join(self.path, e.path) for e in touched])
-            .filter(~condition)
-        )
+        keep = self._read(touched, _schema(m)).filter(~condition)
         new = self._write_data(keep, v + 1, m["metadata"].get("key"))
         untouched = [e for e in files if e not in touched]
         self._commit(
@@ -486,7 +518,9 @@ def ingest_versioned(
     rewritten, and the 'ntp%08d' id counter (ntp_utils.py:51-69) rides
     in commit metadata — no full-table max() scan per batch, which is
     what makes incremental ingest O(batch) instead of O(store) at
-    100 TB."""
+    100 TB. The ids the batch mints are counted by an Observation on
+    the written rows, so the count costs no job of its own."""
+    from datalake_etlscripts_spark.functions.scalar import order_range, parse_ntp_id
     from datalake_etlscripts_spark.versioning import max_order, merge_batch
 
     v = store.latest_version()
@@ -494,26 +528,20 @@ def ingest_versioned(
     start = meta.get("max_order")
     if start is None:  # legacy table: derive once, then track
         start = max_order(store.snapshot(v), group)
-
-    n_new = 0
+    minted = Observation("ingest_versioned")
+    order, hi = parse_ntp_id(F.col("_id")), order_range(group)[1]
 
     def _merge(subset: DataFrame, source: DataFrame) -> DataFrame:
-        nonlocal n_new
-        actives = subset.filter(
-            ~F.coalesce(F.col("obsolete_version"), F.lit(False))
-        ).select("id")
-        n_new = (
-            source.select("id").where(F.col("id").isNotNull() & (F.col("id") != ""))
-            .distinct().join(actives, "id", "left_anti").count()
+        return merge_batch(subset, source, fields, group=group, start_order=start).observe(
+            minted, F.count_if((order > start) & (order <= hi)).alias("n_new")
         )
-        return merge_batch(subset, source, fields, group=group, start_order=start)
 
     return store.merge(
         incoming,
         _merge,
         source_key="id",
         operation="INGEST",
-        metadata_update=lambda: {"max_order": start + n_new},
+        metadata_update=lambda: {"max_order": start + minted.get["n_new"]},
     )
 
 

@@ -59,11 +59,6 @@ def write_bucketed_store(
     state.write.mode(mode).bucketBy(buckets, "id").sortBy("id").saveAsTable(table)
 
 
-def overwrite_table(df: DataFrame, path: str) -> None:
-    """K7: drop/recreate semantics (read_parquet.py:75-78 --drop)."""
-    df.write.mode("overwrite").parquet(path)
-
-
 def compact_files(
     spark: SparkSession,
     path: str,

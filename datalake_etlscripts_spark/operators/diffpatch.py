@@ -75,11 +75,3 @@ def patch_map(fields: list[str], old_prefix: str = "_old_") -> Column:
         entries.append(F.when(changed, F.struct(F.lit(f).alias("k"), new_v.alias("v"))))
     arr = F.filter(F.array(*entries), lambda e: e.isNotNull())
     return F.map_from_entries(arr)
-
-
-def apply_patch(fields: list[str], patch: Column) -> list[Column]:
-    """F18 inverse: apply a patch map onto stored field columns —
-    patched value wins where present."""
-    return [
-        F.coalesce(F.element_at(patch, f), F.col(f)).alias(f) for f in fields
-    ]

@@ -55,16 +55,6 @@ def set_decoder(fn: Callable[[bytes], tuple[int, int]]) -> None:
     _decoder = fn
 
 
-def real_decoder_unavailable(raw: bytes) -> tuple[int, int]:
-    raise NotImplementedError(
-        "JPEG entropy decode is not installed in this container; "
-        "decode_pixels covers REAL pixel decode for BMP/PPM/PNG/GIF, "
-        "parse_image_header covers header decode for "
-        "BMP/PPM/PGM/PNG/GIF/JPEG, or call set_decoder(...) with a "
-        "real implementation (e.g. PIL.Image.open)"
-    )
-
-
 # ---------------------------------------------------------------------------
 # Pure-Python REAL codec path (no external libs): header decode for
 # the classic raster formats, plus BMP/PPM encoders so the sandbox can

@@ -31,6 +31,11 @@ def get_spark(
       ``toPandas``) — the vectorized slow path instead of pickle.
     - shuffle partitions sized to cores locally; on a real cluster AQE
       coalescing makes the initial number mostly irrelevant.
+    - no Python call-site capture per Column/function call
+      (``dataFrameDebugging``): each captured call costs several py4j
+      round trips, hundreds per versioned-ingest batch. Errors keep
+      their class and message, without the Python call-site context.
+      PySpark reads this once per process, at the first Column call.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
     if master is None:
@@ -51,6 +56,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -12,11 +12,6 @@ from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
 
-def field_counts(df: DataFrame, field: str) -> DataFrame:
-    """A2: value → count for one field, plus Catalyst-pruned scan."""
-    return df.groupBy(field).agg(F.count(F.lit(1)).alias("cnt"))
-
-
 def summary_counts(df: DataFrame, fields: list[str]) -> DataFrame:
     """A2 generalized: one scan → (field, value, cnt) for every
     configured field, using GROUPING SETS instead of N scans.

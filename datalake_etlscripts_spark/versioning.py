@@ -54,7 +54,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from datalake_etlscripts_spark.functions.scalar import MIN_ORDER, format_ntp_id, parse_ntp_id
+from datalake_etlscripts_spark.functions.scalar import format_ntp_id, order_range, parse_ntp_id
 from datalake_etlscripts_spark.operators.checkpointing import cut_lineage
 
 STATE_META = ["_id", "id", "updated", "obsolete_version", "updated_to", "patch_data"]
@@ -90,8 +90,7 @@ def max_order(existing: DataFrame, group: str = "contracts") -> int:
     """A1: last assigned id order for the group (ntp_utils.py:51-69);
     MIN_ORDER[group] when the store has none (read_parquet.py:75-80).
     An aggregate over the key column only — column-pruned scan."""
-    lo = MIN_ORDER["minors"] if group == "minors" else 0
-    hi = lo + MIN_ORDER["minors"] - 1
+    lo, hi = order_range(group)
     row = (
         existing.select(parse_ntp_id(F.col("_id")).alias("o"))
         .filter(F.col("o").between(lo, hi))
@@ -173,8 +172,7 @@ def merge_batch(
     # fewer blocking job per merge.
     needs_id = resolved.filter(F.col("_action") != "merge")
     if start_order is None:
-        lo = MIN_ORDER["minors"] if group == "minors" else 0
-        hi = lo + MIN_ORDER["minors"] - 1
+        lo, hi = order_range(group)
         mo = (
             existing.select(parse_ntp_id(F.col("_id")).alias("_o"))
             .filter(F.col("_o").between(lo, hi))
@@ -209,6 +207,7 @@ def merge_batch(
 
     from datalake_etlscripts_spark.operators.diffpatch import patch_map
 
+    patch = patch_map(fields)
     upserts = resolved.select(
         F.col("_target_id").alias("_id"),
         "id",
@@ -226,9 +225,7 @@ def merge_batch(
         # a no-op re-ingest keeps the previous patch (idempotency)
         F.when(
             F.col("_action") == "merge",
-            F.when(
-                F.size(patch_map(fields)) > 0, F.to_json(patch_map(fields))
-            ).otherwise(F.col("_old_patch_data")),
+            F.when(F.size(patch) > 0, F.to_json(patch)).otherwise(F.col("_old_patch_data")),
         ).alias("patch_data"),
         *[merged_field(f).alias(f) for f in fields],
     )

@@ -6,6 +6,7 @@ of MongoDB upserts)."""
 from __future__ import annotations
 
 import os
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -21,6 +22,20 @@ from datalake_etlscripts_spark.versioning import (
     check_unique_active,
     merge_batch,
 )
+
+
+def _jobs_started(spark, fn) -> int:
+    """How many Spark jobs ``fn()`` starts, counted in the status store
+    once the listener bus has delivered every event."""
+    sc = spark.sparkContext
+    group = f"txstore-probe-{uuid.uuid4().hex}"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _mk(spark, tmp_path, rows, name="t", key="id"):
@@ -116,9 +131,20 @@ def _vstate(spark, rows):
     )
 
 
-@pytest.mark.slow
-def test_ingest_versioned_matches_direct_merge(spark, tmp_path):
-    """COW ingest through the store ≡ merge_batch over the whole state."""
+def _all_rows(df):
+    """Every row over the columns sorted by name, arrays as tuples."""
+    cols = sorted(df.columns)
+    return sorted(
+        (tuple(tuple(v) if isinstance(v, list) else v for v in r) for r in df.select(*cols).collect()),
+        key=repr,
+    )
+
+
+def test_ingest_versioned_rows_and_counter(spark, tmp_path):
+    """COW ingest through the store ≡ merge_batch over the whole state,
+    for a batch with one merge and one new key and for the same batch
+    again; the id counter the commit observes advances by exactly the
+    one new key, then by 0 (idempotent re-ingest)."""
     fields = ["title", "price"]
     state = _vstate(
         spark,
@@ -129,54 +155,72 @@ def test_ingest_versioned_matches_direct_merge(spark, tmp_path):
         ],
     )
     st = TransactionalStore.create(
-        spark,
-        os.path.join(str(tmp_path), "ingest"),
-        state.repartition(3, "id"),
-        key="id",
-        metadata={"max_order": 3},
+        spark, os.path.join(str(tmp_path), "ingest"), state.repartition(3, "id"),
+        key="id", metadata={"max_order": 3},
     )
     batch = _vrows(
         spark,
         [
-            ("k2", ["2024-02-15 00:00:00"], "t2b", ""),  # merge onto ntp00000002
-            ("k9", ["2024-09-01 00:00:00"], "t9", "9"),  # fresh id ntp00000004
+            ("k2", ["2024-02-15 00:00:00"], "t2b", ""),  # merges onto ntp00000002
+            ("k9", ["2024-09-01 00:00:00"], "t9", "9"),  # mints ntp00000004
         ],
     )
-    ingest_versioned(st, batch, fields)
-    got = st.snapshot()
-    expect = merge_batch(state, batch, fields, start_order=3)
-    sel = lambda d: {  # noqa: E731
-        (r["_id"], r["id"], tuple(r["updated"]), r["obsolete_version"], r["title"])
-        for r in d.collect()
-    }
-    assert sel(got) == sel(expect)
-    assert check_unique_active(got).isEmpty()
-    assert check_pointers_resolve(got).isEmpty()
-    # counter advanced by exactly the one fresh key, recorded in metadata
-    assert st._read_manifest(st.latest_version())["metadata"]["max_order"] == 4
+    expect = _all_rows(merge_batch(state, batch, fields, start_order=3))
+    for _ in range(2):
+        ingest_versioned(st, batch, fields)
+        got = st.snapshot()
+        assert _all_rows(got) == expect
+        assert check_unique_active(got).isEmpty()
+        assert check_pointers_resolve(got).isEmpty()
+        assert st._read_manifest(st.latest_version())["metadata"]["max_order"] == 4
 
 
-@pytest.mark.slow
 def test_ingest_versioned_idempotent_counter(spark, tmp_path):
-    """Re-ingesting the same batch is a no-op on rows AND the counter."""
+    """A batch whose key lies outside every file's [key_min, key_max]
+    touches no file (the merge runs over an empty subset); its rows
+    still equal merge_batch over the whole state, the counter advances
+    by the one new key, and re-ingesting it changes neither."""
     fields = ["title", "price"]
+    state = _vstate(
+        spark, [("ntp00000001", "k1", ["2024-01-01 00:00:00"], False, None, None, "t1", "1")]
+    )
     st = TransactionalStore.create(
-        spark,
-        os.path.join(str(tmp_path), "idem"),
-        _vstate(
-            spark,
-            [("ntp00000001", "k1", ["2024-01-01 00:00:00"], False, None, None, "t1", "1")],
-        ),
-        key="id",
-        metadata={"max_order": 1},
+        spark, os.path.join(str(tmp_path), "idem"), state, key="id", metadata={"max_order": 1}
     )
     batch = _vrows(spark, [("k5", ["2024-05-01 00:00:00"], "t5", "5")])
-    ingest_versioned(st, batch, fields)
-    first = {(r["_id"], r["id"]) for r in st.snapshot().collect()}
-    ingest_versioned(st, batch, fields)
-    second = {(r["_id"], r["id"]) for r in st.snapshot().collect()}
-    assert first == second
-    assert st._read_manifest(st.latest_version())["metadata"]["max_order"] == 2
+    expect = _all_rows(merge_batch(state, batch, fields, start_order=1))
+    for _ in range(2):
+        ingest_versioned(st, batch, fields)
+        assert _all_rows(st.snapshot()) == expect
+        assert st._read_manifest(st.latest_version())["metadata"]["max_order"] == 2
+    assert st._read_manifest(1)["remove"] == []  # the first ingest touched no file
+
+
+def test_log_records_file_stats_and_schema(spark, tmp_path):
+    """The manifest's per-file rows and key min/max equal Spark's over
+    each file; snapshot() reads with the schema the log records, which
+    equals the live files' footer union after a create, an evolving
+    append and a merge, and starts no Spark job."""
+    st = _mk(spark, tmp_path, [(f"k{i:02d}", i) for i in range(12)])
+    st.append(
+        spark.createDataFrame([("m1", 1, "x"), ("z9", 2, None)], "id string, val long, note string"),
+        evolve_schema=True,
+    )
+    st.merge(
+        spark.createDataFrame([("k03", 30, "y"), ("n1", 4, "w")], "id string, val long, note string"),
+        lambda sub, s: sub.join(s.select("id"), "id", "left_anti").unionByName(s),
+    )
+    for v in st.versions():
+        files, _ = st._live(v)
+        paths = [os.path.join(st.path, e.path) for e in files]
+        for e, p in zip(files, paths):
+            r = spark.read.parquet(p).agg(F.count(F.lit(1)), F.min("id"), F.max("id")).first()
+            assert (e.rows, e.key_min, e.key_max) == tuple(r), e.path
+        inferred = spark.read.option("mergeSchema", "true").parquet(*paths).schema
+        assert st.snapshot(version=v).schema == inferred, v
+    assert st.snapshot(version=0).columns == ["id", "val"]
+    assert _jobs_started(spark, lambda: st.snapshot().schema) == 0
+    assert _jobs_started(spark, lambda: st.snapshot(version=0).columns) == 0
 
 
 def test_snapshot_diff_cdc_all_change_types(spark, tmp_path):
