@@ -24,6 +24,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 NTP_ID_RE = r"^ntp[0-9]{8}$"
+NTP_ID_FMT = "ntp%08d"
 # group boundaries: insiders/outsiders ids start at 0, minors at 10,000,000
 # (reference nextplib/ntp_constants.py:23-27)
 MIN_ORDER = {"insiders": 0, "outsiders": 0, "minors": 10_000_000}
@@ -37,7 +38,7 @@ def order_range(group: str = "contracts") -> tuple[int, int]:
 
 def format_ntp_id(order: Column) -> Column:
     """F1: int order → 'ntp%08d' surrogate key."""
-    return F.format_string("ntp%08d", order.cast("long"))
+    return F.format_string(NTP_ID_FMT, order.cast("long"))
 
 
 def parse_ntp_id(ntp_id: Column) -> Column:

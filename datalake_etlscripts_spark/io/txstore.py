@@ -63,9 +63,23 @@ import time
 import uuid
 from dataclasses import dataclass
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+
+
+_HISTORY = pa.schema(
+    [
+        ("version", pa.int64()),
+        ("timestamp", pa.float64()),
+        ("operation", pa.string()),
+        ("n_files", pa.int64()),
+        ("n_rows", pa.int64()),
+        ("n_added", pa.int64()),
+        ("n_removed", pa.int64()),
+    ]
+)
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -309,31 +323,31 @@ class TransactionalStore:
                 f"{label}: schema differs from table (extra={extra}, "
                 f"missing={missing}); pass evolve_schema=True to evolve"
             )
+        if list(incoming) == list(current):
+            return df
         for n in missing:
             df = df.withColumn(n, F.lit(None).cast(current[n]))
         # stable order: table columns first, evolved additions after
         return df.select(*[n for n in current], *extra)
 
     def history(self) -> DataFrame:
+        """One row per committed version. Built from an Arrow table, so
+        it plans as a LocalRelation and starts no Python-worker job."""
         rows = []
         for v in self.versions():
             m = self._read_manifest(v)
             rows.append(
-                (
-                    m["version"],
-                    float(m["timestamp"]),
-                    m["operation"],
-                    len(m["files"]),
-                    sum(f["rows"] for f in m["files"]),
-                    len(m["add"]),
-                    len(m["remove"]),
-                )
+                {
+                    "version": m["version"],
+                    "timestamp": float(m["timestamp"]),
+                    "operation": m["operation"],
+                    "n_files": len(m["files"]),
+                    "n_rows": sum(f["rows"] for f in m["files"]),
+                    "n_added": len(m["add"]),
+                    "n_removed": len(m["remove"]),
+                }
             )
-        return self.spark.createDataFrame(
-            rows,
-            "version long, timestamp double, operation string, n_files long, "
-            "n_rows long, n_added long, n_removed long",
-        )
+        return self.spark.createDataFrame(pa.Table.from_pylist(rows, schema=_HISTORY))
 
     def append(
         self, df: DataFrame, operation: str = "APPEND", evolve_schema: bool = False
@@ -360,30 +374,40 @@ class TransactionalStore:
 
     # -- copy-on-write operations --------------------------------------
 
+    def _stats_frame(self, entries: list[FileEntry]) -> DataFrame:
+        """(path, kmin, kmax) of files that have key stats, typed to the
+        key's real type: a lexical compare on numeric keys would
+        mis-prune ("10" < "9"), so never stringify here. Built from an
+        Arrow table, so it plans as a LocalRelation and starts no
+        Python-worker job."""
+        ktype = pa.int64() if isinstance(entries[0].key_min, int) else pa.string()
+        return self.spark.createDataFrame(
+            pa.table(
+                {
+                    "path": pa.array([e.path for e in entries], pa.string()),
+                    "kmin": pa.array([e.key_min for e in entries], ktype),
+                    "kmax": pa.array([e.key_max for e in entries], ktype),
+                }
+            )
+        )
+
     def _prune_touched(self, files: list[FileEntry], source_keys: DataFrame) -> list[FileEntry]:
         """Files whose [key_min, key_max] interval can contain a source
         key. Interval join source_keys × stats — the stats side is tiny
-        and broadcast; files with no stats are conservatively touched."""
+        and broadcast; files with no stats are conservatively touched.
+        Duplicate source keys need no ``distinct``: the paths are
+        deduplicated after the join."""
         with_stats = [e for e in files if e.key_min is not None]
         no_stats = [e for e in files if e.key_min is None]
         if not with_stats:
             return list(files)
-        # stats typed to the key's real type: lexical compare on numeric
-        # keys would mis-prune ("10" < "9"), so never stringify here
-        ktype = "bigint" if isinstance(with_stats[0].key_min, int) else "string"
-        stats = self.spark.createDataFrame(
-            [(e.path, e.key_min, e.key_max) for e in with_stats],
-            f"path string, kmin {ktype}, kmax {ktype}",
-        )
+        stats = self._stats_frame(with_stats)
         k = source_keys.columns[0]
+        key = F.col(k).cast(stats.schema["kmin"].dataType)
         hit = {
             r["path"]
-            for r in source_keys.distinct()
-            .join(
-                F.broadcast(stats),
-                (F.col(k).cast(ktype) >= F.col("kmin"))
-                & (F.col(k).cast(ktype) <= F.col("kmax")),
-                "inner",
+            for r in source_keys.join(
+                F.broadcast(stats), (key >= F.col("kmin")) & (key <= F.col("kmax")), "inner"
             )
             .select("path")
             .distinct()

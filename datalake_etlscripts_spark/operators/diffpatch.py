@@ -5,19 +5,20 @@ The reference diffs two versions of a notice field-by-field into
 OLD/cleanPlace.py_old:13-29) and records per-merge ``patch_data``
 {add: {...}, mod: {...}} while merging (ntp_entry.py:30-46).
 
-Here both shapes are pure Column expressions over a joined pair of
-rows — no Python, no per-row loops:
+Here the diff is a pure Column expression over a joined pair of rows
+— no Python, no per-row loops:
 
 - ``diff_columns``: long-form (field, old_value, new_value, kind)
   rows via a stack of per-field comparisons; kind ∈ add|mod|del.
-- ``patch_map``: MAP<STRING, STRING> of changed fields (new values),
-  the set-oriented ``patch_data`` equivalent, JSON-serializable with
-  to_json for storage in a string column.
+
+The ``patch_data`` change record is not built here: it is part of the
+merge statement in ``versioning.merge_batch``, a MAP<STRING, STRING> of
+the changed fields' new values, stored as JSON.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -57,21 +58,3 @@ def diff_columns(
         *key_cols, F.explode(F.array(*diffs)).alias("_d")
     ).select(*key_cols, "_d.field", "_d.old_value", "_d.new_value", "_d.kind")
     return exploded.filter(F.col("kind").isNotNull())
-
-
-def patch_map(fields: list[str], old_prefix: str = "_old_") -> Column:
-    """MAP<field, new_value> of fields whose incoming value is non-empty
-    and differs from the stored one — the ``patch_data`` payload
-    (ntp_entry.py:30-46: add when absent before, mod when changed)."""
-    entries = []
-    for f in fields:
-        old_v = F.col(f"{old_prefix}{f}").cast("string")
-        new_v = F.col(f).cast("string")
-        changed = (
-            new_v.isNotNull()
-            & (new_v != "")
-            & (old_v.isNull() | (old_v != new_v))
-        )
-        entries.append(F.when(changed, F.struct(F.lit(f).alias("k"), new_v.alias("v"))))
-    arr = F.filter(F.array(*entries), lambda e: e.isNotNull())
-    return F.map_from_entries(arr)

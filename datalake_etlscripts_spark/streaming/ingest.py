@@ -105,11 +105,14 @@ def streaming_merge_batch(
     def apply(batch_df: DataFrame, epoch_id: int) -> None:
         # missing path = FIRST batch; an unreadable store must RAISE —
         # a blanket except would silently restart from empty state and
-        # lose the whole history on a transient read failure
+        # lose the whole history on a transient read failure.
+        # The state is read in the micro-batch's own session: merge_batch
+        # is SQL over temp views, which both frames must share.
+        session = batch_df.sparkSession
         if _fs_path_exists(spark, state_path):
-            existing = spark.read.parquet(state_path)
+            existing = session.read.parquet(state_path)
         else:
-            existing = empty_state(spark, fields)
+            existing = empty_state(session, fields)
         merged = merge_batch(existing, batch_df, fields, group=group)
         _stage_swap(spark, merged, state_path, f"epoch{epoch_id}")
 

@@ -104,6 +104,45 @@ def test_merge_rewrites_only_touched_files(spark, tmp_path):
     assert ("a05", 500) in snap and ("z09", 9) in snap and len(snap) == 20
 
 
+def test_merge_prunes_integer_keys_numerically(spark, tmp_path):
+    """Stats on a BIGINT key compare as numbers: with files for keys
+    2..9 and 10..99, merging key 50 rewrites only the second file. A
+    lexical compare would also touch the first ("2" <= "50" <= "9")."""
+    lo = spark.createDataFrame([(k, k) for k in range(2, 10)], "id long, val long")
+    hi = spark.createDataFrame([(k, k) for k in range(10, 100)], "id long, val long")
+    st = TransactionalStore.create(
+        spark, os.path.join(str(tmp_path), "num"), lo.repartition(1), key="id"
+    )
+    st.append(hi.repartition(1))
+    files = st._live(1)[0]
+    assert [(e.key_min, e.key_max) for e in files] == [(2, 9), (10, 99)]
+
+    def upsert(subset, source):
+        return subset.join(source.select("id"), "id", "left_anti").unionByName(source)
+
+    st.merge(spark.createDataFrame([(50, 500)], "id long, val long"), upsert)
+    m = st._read_manifest(2)
+    assert m["remove"] == [files[1].path]
+    assert files[0].path in {f["path"] for f in m["files"]}
+    snap = {r["id"]: r["val"] for r in st.snapshot().collect()}
+    assert len(snap) == 98 and snap[50] == 500 and snap[2] == 2
+
+
+def test_history_and_prune_stats_are_local_relations(spark, tmp_path):
+    """history() and the pruning stats frame plan as a LocalRelation,
+    which runs on the driver, not as a LogicalRDD, whose scan starts a
+    Python-worker job."""
+    st = _mk(spark, tmp_path, [("a", 1), ("b", 2)])
+    st.append(spark.createDataFrame([("c", 3)], "id string, val long"))
+
+    def plan(df):
+        return df._jdf.queryExecution().optimizedPlan().nodeName()
+
+    assert plan(st.history()) == "LocalRelation"
+    assert plan(st._stats_frame(st._live(1)[0])) == "LocalRelation"
+    assert [r["n_rows"] for r in st.history().collect()] == [2, 3]
+
+
 def test_delete_where_and_vacuum(spark, tmp_path):
     st = _mk(spark, tmp_path, [("a", 1), ("b", 2), ("c", 3)])
     st.delete_where(F.col("id") == "b")
