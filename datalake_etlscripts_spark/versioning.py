@@ -50,8 +50,8 @@ and the id counter as the named parameter ``:start_order``. The plans
 are the ones the Column API built, but building them is one parse per
 statement on the JVM side instead of one py4j round trip per Column
 call: about 20 round trips for a 10-field merge instead of about
-2,000, at 0.3-2 ms each, and that driver time was most of a small
-batch's wall time. Field names are quoted identifiers (backticks
+2,000, at 0.3-2 ms each, and that time outside Spark jobs was most
+of a small batch's wall time. Field names are quoted identifiers (backticks
 doubled) or escaped string literals, with braces doubled for the
 formatter; inside the statements field i is ``_f{i}`` (incoming) and
 ``_o{i}`` (stored).
@@ -143,8 +143,7 @@ def merge_batch(
     # W1: fresh ids for unmatched keys. Only these (batch-sized, not
     # store-sized) rows cross the single-partition row_number. Without
     # a given start_order the A1 counter (max over the store) rides the
-    # plan as a broadcast 1-row aggregate instead of a separate driver
-    # round-trip.
+    # plan as a broadcast 1-row aggregate instead of a separate collect.
     if start_order is None:
         lo, hi = order_range(group)
         frames = {

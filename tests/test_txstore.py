@@ -130,7 +130,7 @@ def test_merge_prunes_integer_keys_numerically(spark, tmp_path):
 
 def test_history_and_prune_stats_are_local_relations(spark, tmp_path):
     """history() and the pruning stats frame plan as a LocalRelation,
-    which runs on the driver, not as a LogicalRDD, whose scan starts a
+    which starts no job, not as a LogicalRDD, whose scan starts a
     Python-worker job."""
     st = _mk(spark, tmp_path, [("a", 1), ("b", 2)])
     st.append(spark.createDataFrame([("c", 3)], "id string, val long"))
